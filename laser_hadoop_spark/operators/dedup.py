@@ -566,8 +566,8 @@ def prefix_filter_pairs(
         # sharded join's replication+sort overhead only pays when a
         # token's cartesian actually dominates a task).
         prefix = prefix.localCheckpoint(eager=True)
-    # r10 scale fix (the X135/X79 treatment, measured by
-    # scripts/probe_round10.py): on a small-vocabulary corpus even the
+    # r10 scale fix (the X135/X79 treatment, measured in round 10 on
+    # sf0.1 and a x10 corpus): on a small-vocabulary corpus even the
     # "rare" prefix tokens carry df in the thousands, and raw candidate
     # generation is sum(df_t^2) — 66M rows at sf0.1, 6.6G at the x10
     # probe corpus. Three exact countermeasures:

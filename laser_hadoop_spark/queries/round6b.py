@@ -185,7 +185,7 @@ def q_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     10x-orders-same-calendar (3.57 -> 3.52 s end-to-end) and 49%
     SLOWER at sf0.1 (1.35 -> 2.01 s, the blocking materialization
     defeats pipelining), so the declarative spelling stands
-    (probe_round8.py; contrast q_isotonic_fit, whose checkpoint IS
+    (contrast q_isotonic_fit, whose checkpoint IS
     load-bearing — its bin table feeds a triple self-join AQE cannot
     dedupe across).
     """

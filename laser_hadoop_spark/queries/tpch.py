@@ -1,4 +1,4 @@
-"""Headline analytical queries (TPC-H-shaped) used by bench.py.
+"""Headline analytical queries (TPC-H-shaped).
 
 These compose the §2 operators into realistic multi-operator pipelines
 over the star schema — the closest analogue of the reference's

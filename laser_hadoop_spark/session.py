@@ -17,7 +17,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults appropriate both for the local[32] harness and, with
+# Defaults appropriate both for the local harness and, with
 # master/memory overridden, for a large cluster: everything here is a
 # logical-plan / optimizer setting, not a hard-coded physical choice.
 ENGINE_CONF: dict[str, str] = {
@@ -94,11 +94,12 @@ def release_persisted(
     ``persist()`` to pin reused relations for the duration of ONE query;
     the blocks are owned by the returned DataFrame's plan, so they can
     only be freed after the caller has consumed the result. Long
-    sessions that run many queries back-to-back (bench.py, the oracle
-    sweeps, the driver) MUST call this between queries. Root cause of
-    the q_jaro_pairs in-session slow mode (VERDICT_r10 items 1/7),
-    measured in round 11: blocks are otherwise freed only when a JVM GC
-    lets the ContextCleaner notice dropped references, so storage
+    sessions that run many queries back-to-back (the benchmark's
+    analytics pass, the oracle sweeps, the driver) MUST call this
+    between queries. Root cause of the q_jaro_pairs in-session slow
+    mode (VERDICT_r10 items 1/7), measured in round 11: blocks are
+    otherwise freed only when a JVM GC lets the ContextCleaner notice
+    dropped references, so storage
     tenancy on the shared 8 GB local-mode heap is GC-timing-dependent —
     a 42-query bench session accumulates ~1.5 GB when references
     linger, and 3.2 GB of pinned storage reproducibly degrades
@@ -139,7 +140,7 @@ def storage_memory_used(spark: SparkSession) -> int:
     """Bytes currently held by this JVM's block-manager memory store.
 
     Diagnostic hook (local mode: the driver's store IS the executor
-    store) used by bench.py and the session-mode tests to prove the
+    store) used by the registry-sweep test to prove the
     release_persisted() discipline keeps storage bounded across a
     multi-query session."""
     env = spark.sparkContext._jvm.org.apache.spark.SparkEnv.get()
@@ -193,18 +194,20 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real
-    cluster pass None and submit through spark-submit, which sets master.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally, or to one
+    thread per host CPU when the variable is unset; the shuffle partition
+    count defaults to the same number. On a real cluster pass None and
+    submit through spark-submit, which sets master.
     """
     ensure_vendored_protobuf()
     builder = SparkSession.builder.appName(app_name)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     if master is None and "SPARK_MASTER" not in os.environ:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         master = f"local[{cpus}]"
     if master:
         builder = builder.master(master)
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        shuffle_partitions = int(cpus)
     conf = dict(ENGINE_CONF)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     conf.setdefault("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

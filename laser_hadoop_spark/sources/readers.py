@@ -82,9 +82,13 @@ def read_seq(spark: SparkSession, path: str) -> DataFrame:
     2 ID fields then 3 values per locus (:124-136). Parsed into
     (pop_id, ind_id, loci array<struct<v1,v2,v3>>, arity) — the
     wide-text row becomes a typed nested column in one pass.
+
+    The split array is projected once below the per-locus transform:
+    inlined into every element_at, each line would be split 3 x loci
+    times, so parse cost would grow with individuals x loci^2.
     """
-    lines = spark.read.text(path)
-    fields = F.split(F.col("value"), "[\t ]")
+    lines = spark.read.text(path).select(F.split(F.col("value"), "[\t ]").alias("fields"))
+    fields = F.col("fields")
     n = F.size(fields)
     triple = lambda i: F.struct(  # noqa: E731
         F.element_at(fields, i + 1).cast("double").alias("v1"),

@@ -162,320 +162,6 @@ def running_max_per_user(events: DataFrame) -> DataFrame:
     )
 
 
-def rate_pipeline_bench(
-    spark,
-    *,
-    seconds: float = 6.0,
-    rows_per_second: int = 200_000,
-    n_keys: int = 100,
-    window_width: str = "1 second",
-    work_dir: str | None = None,
-) -> dict:
-    """Measured streaming micro-bench: rate source -> watermarked
-    tumbling agg at FIXED key cardinality -> foreachBatch upsert.
-
-    Returns throughput and state-store size actually observed (from
-    StreamingQueryProgress), so 'state is bounded by keys x open
-    windows, not input volume' is a measurement, not an assertion:
-    state_rows_max stays O(n_keys * windows-in-watermark) however high
-    rows_per_second goes. The upsert sink is the real
-    sources/sinks.upsert_parquet merge — its table is bounded the same
-    way.
-    """
-    import shutil
-    import tempfile
-    import time
-
-    from laser_hadoop_spark.sources.sinks import upsert_parquet
-
-    tmp = work_dir or tempfile.mkdtemp(prefix="lh_stream_bench_")
-    base_dir = f"{tmp}/upsert_base"
-    src = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-        .select(
-            (F.col("value") % n_keys).alias("key"),
-            F.col("timestamp").alias("ts"),
-            (F.col("value") % 1000).cast("double").alias("value"),
-        )
-    )
-    agg = (
-        src.withWatermark("ts", "2 seconds")
-        .groupBy(F.window("ts", window_width), "key")
-        .agg(F.count("*").alias("n_events"), F.sum("value").alias("sum_value"))
-        .select(
-            F.col("window.start").alias("window_start"), "key", "n_events", "sum_value"
-        )
-    )
-
-    def merge_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        upsert_parquet(spark, base_dir, batch_df, keys=["window_start", "key"])
-
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(merge_batch)
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    min_batches = 3
-    try:
-        deadline = time.time() + max(seconds, 20.0)
-        while time.time() < deadline:
-            time.sleep(0.5)
-            nonempty = sum(
-                1 for p in q.recentProgress if (p.get("numInputRows") or 0) > 0
-            )
-            if nonempty >= min_batches:
-                break
-    finally:
-        q.stop()
-    input_rows = 0
-    busy_ms = 0
-    state_rows_max = 0
-    batches = 0
-    for p in q.recentProgress:
-        rows = p.get("numInputRows", 0) or 0
-        if rows == 0:
-            continue  # warm-up/empty triggers say nothing about throughput
-        input_rows += rows
-        busy_ms += (p.get("durationMs") or {}).get("triggerExecution", 0) or 0
-        batches += 1
-        for so in p.get("stateOperators", []) or []:
-            state_rows_max = max(state_rows_max, so.get("numRowsTotal", 0) or 0)
-    import os
-
-    table_rows = (
-        spark.read.parquet(base_dir).count() if os.path.isdir(base_dir) else 0
-    )
-    if work_dir is None:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return {
-        "rows_per_sec": round(input_rows / (busy_ms / 1000.0), 1) if busy_ms else 0.0,
-        "input_rows": input_rows,
-        "batches": batches,
-        "state_rows_max": state_rows_max,
-        "n_keys": n_keys,
-        "upsert_table_rows": table_rows,
-    }
-
-
-def pinned_stream_bench(
-    spark,
-    *,
-    n_rows: int = 1_000_000,
-    n_files: int = 5,
-    n_keys: int = 100,
-    rows_per_second: int = 200_000,
-    window_width: str = "1 second",
-    work_dir: str | None = None,
-) -> dict:
-    """Pinned-workload streaming micro-bench (round-3 verdict item 5).
-
-    ``rate_pipeline_bench`` measures whatever the rate source happened
-    to emit before min_batches filled — input volume varied 1.0M-1.8M
-    rows between rounds, so rows_per_sec was not trendable. This
-    variant drives the identical pipeline (watermarked tumbling agg ->
-    foreachBatch upsert_parquet) from a DETERMINISTIC file stream:
-
-    - exactly ``n_rows`` rows with synthetic event times (a fixed epoch
-      base + value/rows_per_second seconds — no wall clock anywhere);
-    - exactly ``n_files`` parquet files, consumed one per trigger
-      (maxFilesPerTrigger=1), so the batch structure is identical run
-      to run;
-    - Trigger.AvailableNow: the stream drains the fixed input and
-      stops itself.
-
-    rows_per_sec = n_rows / sum(triggerExecution) is therefore the same
-    workload every round and comparable across BENCH_r{N}.json.
-    """
-    import shutil
-    import tempfile
-    import time
-
-    from laser_hadoop_spark.sources.sinks import upsert_parquet
-
-    tmp = work_dir or tempfile.mkdtemp(prefix="lh_stream_bench_")
-    in_dir = f"{tmp}/input"
-    base_dir = f"{tmp}/upsert_base"
-    base_epoch = 1_700_000_000  # fixed — event time derives from row id only
-    rows = spark.range(n_rows).select(
-        (F.col("id") % n_keys).alias("key"),
-        F.timestamp_seconds(
-            F.lit(base_epoch) + F.col("id") / F.lit(float(rows_per_second))
-        ).alias("ts"),
-        (F.col("id") % 1000).cast("double").alias("value"),
-    )
-    rows.repartition(n_files).write.mode("overwrite").parquet(in_dir)
-
-    src = (
-        spark.readStream.schema("key bigint, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    agg = (
-        src.withWatermark("ts", "2 seconds")
-        .groupBy(F.window("ts", window_width), "key")
-        .agg(F.count("*").alias("n_events"), F.sum("value").alias("sum_value"))
-        .select(
-            F.col("window.start").alias("window_start"), "key", "n_events", "sum_value"
-        )
-    )
-
-    def merge_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        upsert_parquet(spark, base_dir, batch_df, keys=["window_start", "key"])
-
-    t0 = time.perf_counter()
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(merge_batch)
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
-    wall_s = time.perf_counter() - t0
-
-    input_rows = 0
-    busy_ms = 0
-    state_rows_max = 0
-    batches = 0
-    for p in q.recentProgress:
-        r = p.get("numInputRows", 0) or 0
-        if r == 0:
-            continue
-        input_rows += r
-        busy_ms += (p.get("durationMs") or {}).get("triggerExecution", 0) or 0
-        batches += 1
-        for so in p.get("stateOperators", []) or []:
-            state_rows_max = max(state_rows_max, so.get("numRowsTotal", 0) or 0)
-    import os
-
-    table_rows = (
-        spark.read.parquet(base_dir).count() if os.path.isdir(base_dir) else 0
-    )
-    if work_dir is None:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return {
-        "rows_per_sec": round(input_rows / (busy_ms / 1000.0), 1) if busy_ms else 0.0,
-        "input_rows": input_rows,
-        "batches": batches,
-        "state_rows_max": state_rows_max,
-        "n_keys": n_keys,
-        "upsert_table_rows": table_rows,
-        "wall_sec": round(wall_s, 3),
-        "pinned": True,
-    }
-
-
-def pinned_tws_bench(
-    spark,
-    *,
-    n_rows: int = 1_000_000,
-    n_files: int = 5,
-    n_keys: int = 100,
-    work_dir: str | None = None,
-) -> dict:
-    """Pinned-workload bench for the Spark-4 typed-state streaming path
-    (VERDICT_r11 item 7).
-
-    ``pinned_stream_bench`` covers the applyInPandasWithState pipeline;
-    this drives ST20's ``moments_stream_tws`` — transformWithStateInPandas
-    on the RocksDB state store — through the SAME pinned-input
-    discipline (exactly ``n_rows`` synthetic events in ``n_files``
-    parquet files, one file per trigger, Trigger.AvailableNow, no wall
-    clock anywhere), so the two committed rows/s numbers are each
-    trendable across rounds and comparable to each other: same input
-    volume, same key cardinality, different state runtime (JVM
-    HDFSBackedStateStore + Arrow-batched pandas closure vs RocksDB +
-    the typed-state server protocol).
-
-    rows_per_sec = n_rows / sum(triggerExecution). Values are exact
-    micro-integers derived from the row id, so the per-key moments the
-    processor folds are identical every run.
-    """
-    import shutil
-    import tempfile
-    import time
-
-    tmp = work_dir or tempfile.mkdtemp(prefix="lh_tws_bench_")
-    in_dir = f"{tmp}/input"
-    rows = spark.range(n_rows).select(
-        F.col("id").alias("event_id"),
-        F.timestamp_seconds(F.lit(1_700_000_000) + F.col("id")).alias("ts"),
-        (F.col("id") % n_keys).alias("user_id"),
-        F.lit("click").alias("event_type"),
-        ((F.col("id") % 997).cast("double") / 7.0).alias("value"),
-    )
-    rows.repartition(n_files).write.mode("overwrite").parquet(in_dir)
-
-    prior = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    t0 = time.perf_counter()
-    try:
-        src = (
-            spark.readStream.schema(
-                "event_id long, ts timestamp, user_id long,"
-                " event_type string, value double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
-        q = (
-            moments_stream_tws(src)
-            .writeStream.outputMode("update")
-            .format("noop")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-        wall_s = time.perf_counter() - t0
-        input_rows = 0
-        busy_ms = 0
-        state_rows_max = 0
-        batches = 0
-        for p in q.recentProgress:
-            r = p.get("numInputRows", 0) or 0
-            if r == 0:
-                continue
-            input_rows += r
-            busy_ms += (p.get("durationMs") or {}).get("triggerExecution", 0) or 0
-            batches += 1
-            for so in p.get("stateOperators", []) or []:
-                state_rows_max = max(state_rows_max, so.get("numRowsTotal", 0) or 0)
-    finally:
-        if prior is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prior)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        if work_dir is None:
-            shutil.rmtree(tmp, ignore_errors=True)
-    return {
-        "rows_per_sec": round(input_rows / (busy_ms / 1000.0), 1) if busy_ms else 0.0,
-        "input_rows": input_rows,
-        "batches": batches,
-        "state_rows_max": state_rows_max,
-        "n_keys": n_keys,
-        "wall_sec": round(wall_s, 3),
-        "pinned": True,
-    }
-
-
 def start_upsert_sink(
     stream: DataFrame,
     spark,
@@ -494,13 +180,20 @@ def start_upsert_sink(
     inside streaming; with a checkpoint the sink is effectively-once:
     a replayed batch re-merges the same keys idempotently (the merge is
     deterministic per batch content, unlike blind appends).
+
+    Every action on ``batch_df`` re-runs the micro-batch's stateful plan
+    (and counts its state-store metrics again), so the batch is cached
+    and filled by one count before the emptiness test and the merge.
     """
     from laser_hadoop_spark.sources.sinks import upsert_parquet
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        upsert_parquet(spark, base_dir, batch_df, keys=keys)
+        batch_df.persist()
+        try:
+            if batch_df.count():
+                upsert_parquet(spark, base_dir, batch_df, keys=keys)
+        finally:
+            batch_df.unpersist()
 
     writer = stream.writeStream.foreachBatch(merge_batch).option(
         "checkpointLocation", checkpoint_dir

@@ -24,8 +24,7 @@ def _plan_through_ckpts(spark, sf_dir, fn) -> str:
     Round 13: queries that pin a relation (lazily or eagerly) truncate
     their visible plan at a Scan ExistingRDD; auditing only the top
     plan goes blind to everything upstream of the pin (the r12 simhash
-    blind spot, VERDICT_r12 item 9). Same capture discipline as
-    scripts/measure_r13.py."""
+    blind spot, VERDICT_r12 item 9)."""
     try:
         from pyspark.sql.classic.dataframe import DataFrame as _CDF
     except ImportError:  # pragma: no cover - older Spark

@@ -1,88 +1,10 @@
 """Round-12 verdict-item regression pins.
 
-VERDICT_r11 item 4: the slow-mode verdict must emit a non-null,
-adjudicable result in ALL host states — a host-red run reports its
-over-band list with ``host_ambiguous: true`` plus the storage-peak
-band verdict (the structural signal ambient load cannot fake), so an
-in-process regression can never hide behind ambient load; and the
-per-query band set extends to the three widest-spread storage-
-sensitive bench queries (q_bootstrap_ci, q_dedup_survivors,
-q_dbscan_core).
+The hash/id suffix family of the pair-shuffle audit, the scoped
+``release_persisted(keep_ids=...)``, the label-group data assumption
+behind q_procrustes_kdim's oracle, and the recall and candidate-cut
+gates of the production-density ANN line (q_ann_lsh_prod).
 """
-
-import bench
-
-
-def test_slow_mode_verdict_host_red_emits_over_band_list():
-    """Host-red + over-band -> the list is still emitted, marked
-    host-ambiguous (never null: VERDICT_r11 item 4)."""
-    timings = {"q_jaro_pairs": 12.465, "q_product_profit": 1.2}
-    v = bench.slow_mode_verdict(timings, 0.1, host_ok=False, storage_peak_mb=322.0)
-    assert set(v["slow_mode_suspects"]) == {"q_jaro_pairs"}
-    assert v["host_ambiguous"] is True
-    # structural signal: storage in band -> over-band time reads as
-    # ambient load, exactly the r11 driver-capture adjudication
-    assert v["storage_in_band"] is True
-    assert v["storage_band_mb"] == bench.STORAGE_BAND_MB
-
-
-def test_slow_mode_verdict_host_red_clean_run_is_empty_not_null():
-    """Host-red with nothing over band -> {} + host_ambiguous, never
-    None: "checked, clean (under load)" is distinguishable from
-    "couldn't adjudicate"."""
-    v = bench.slow_mode_verdict({"q_jaro_pairs": 1.7}, 0.1, host_ok=False)
-    assert v["slow_mode_suspects"] == {}
-    assert v["host_ambiguous"] is True
-
-
-def test_slow_mode_verdict_host_green_has_no_ambiguity_marker():
-    v = bench.slow_mode_verdict(
-        {"q_jaro_pairs": 1.7}, 0.1, host_ok=True, storage_peak_mb=342.0
-    )
-    assert v["slow_mode_suspects"] == {}
-    assert "host_ambiguous" not in v
-    assert v["storage_in_band"] is True
-
-
-def test_slow_mode_verdict_storage_over_band_is_structural():
-    """A storage peak over STORAGE_BAND_MB flags regardless of host
-    state — multi-GB tenancy is the in-process mode's signature (r11
-    root cause), not something ambient load can produce."""
-    v = bench.slow_mode_verdict(
-        {"q_jaro_pairs": 12.0}, 0.1, host_ok=False, storage_peak_mb=3200.0
-    )
-    assert v["storage_in_band"] is False
-    assert v["host_ambiguous"] is True
-    assert set(v["slow_mode_suspects"]) == {"q_jaro_pairs"}
-
-
-def test_slow_mode_bands_cover_widest_spread_queries():
-    """VERDICT_r11 item 4: the three widest-spread storage-sensitive
-    headline queries carry bands; every banded query is on the bench
-    headline so the bands are actually exercised."""
-    for name in ("q_bootstrap_ci", "q_dedup_survivors", "q_dbscan_core"):
-        assert name in bench.SLOW_MODE_BANDS_SF01
-    for name in bench.SLOW_MODE_BANDS_SF01:
-        assert name in bench.HEADLINE, name
-    # bands sit above their measured quiet warm — r12 re-baseline:
-    # best quiet-host NOOP warms at the optimized HEAD (the timed
-    # action moved to the noop sink and these queries got faster; see
-    # PERF_NOTES "Round 12 optimization")
-    noop_warm = {
-        "q_bootstrap_ci": 0.824,
-        "q_dedup_survivors": 1.670,
-        "q_dbscan_core": 1.338,
-    }
-    for name, warm in noop_warm.items():
-        band = bench.SLOW_MODE_BANDS_SF01[name]
-        assert warm < band <= 2.0 * warm, (name, warm, band)
-
-
-def test_slow_mode_verdict_non_sf01_returns_null():
-    """Bands were measured at sf0.1 only — other scales stay
-    unadjudicated (null), with or without storage data."""
-    v = bench.slow_mode_verdict({"q_jaro_pairs": 99.0}, 0.01, host_ok=True)
-    assert v["slow_mode_suspects"] is None
 
 
 def test_payloadish_hash_suffix_family_applies_to_all_stems():
@@ -221,48 +143,3 @@ def test_ann_lsh_prod_recall_vs_exact_topk(spark):
                     cand_pairs.add((members[x], members[y]))
     cand_frac = 2 * len(cand_pairs) / (n * (n - 1))
     assert cand_frac <= 0.20, f"candidate fraction {cand_frac:.3f}"
-
-
-def test_canary_verdict_tws_line_is_adjudicated():
-    """VERDICT_r11 item 7: the typed-state streaming line
-    (transformWithStateInPandas on RocksDB) carries its own band. A
-    TWS ERROR is a code failure reported under streaming_tws_error
-    (never host noise, the ADVICE-r10 discipline); an under-floor
-    throughput is a canary failure; absence (older callers) changes
-    nothing."""
-    quiet = {"py_single_sec": 0.36, "spark_parallel_sec": 0.31}
-    ok_stream = {"rows_per_sec": 90_000.0}
-
-    # round 13 (VERDICT_r12 item 8): floor raised 30k -> 60k from the
-    # five quiet samples on record; a loaded-host 49.5k now flags.
-    v = bench.canary_verdict(quiet, quiet, ok_stream, {"rows_per_sec": 89_000.0})
-    assert v["canary_ok"], v["canary_failures"]
-    v1b = bench.canary_verdict(quiet, quiet, ok_stream, {"rows_per_sec": 49_500.0})
-    assert not v1b["canary_ok"]
-
-    v2 = bench.canary_verdict(quiet, quiet, ok_stream, {"rows_per_sec": 12_000.0})
-    assert not v2["canary_ok"]
-    assert any("streaming_tws.rows_per_sec" in f for f in v2["canary_failures"])
-    assert "streaming_tws_error" not in v2
-
-    v3 = bench.canary_verdict(quiet, quiet, ok_stream, {"error": "ImportError: x"})
-    assert not v3["canary_ok"]
-    assert v3["streaming_tws_error"] == "ImportError: x"
-
-    v4 = bench.canary_verdict(quiet, quiet, ok_stream)  # no TWS sample
-    assert v4["canary_ok"], v4["canary_failures"]
-    assert "streaming_tws_rows_per_sec" in v4["canary_bands"]
-
-
-def test_pinned_tws_bench_measures_the_typed_state_path(spark):
-    """The TWS bench drives ST20's moments processor over the pinned
-    deterministic input and reports a positive throughput with bounded
-    state (one row per key)."""
-    from laser_hadoop_spark.streaming.ops import pinned_tws_bench
-
-    out = pinned_tws_bench(spark, n_rows=50_000, n_files=2, n_keys=20)
-    assert out["pinned"] is True
-    assert out["input_rows"] == 50_000
-    assert out["batches"] == 2
-    assert out["state_rows_max"] == 20
-    assert out["rows_per_sec"] > 0

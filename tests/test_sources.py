@@ -28,6 +28,13 @@ def test_read_seq_shape(spark, fx):
     assert isinstance(rows[0]["loci"][0]["v1"], float)
 
 
+def test_read_seq_splits_each_line_once(spark, fx):
+    """The per-locus transform indexes one projected split array; an
+    inlined split would be evaluated 3 x loci times per line."""
+    plan = readers.read_seq(spark, fx["seq"])._jdf.queryExecution().optimizedPlan()
+    assert plan.toJSON().count("expressions.StringSplit") == 1
+
+
 def test_read_site_and_header(spark, fx):
     site = readers.read_site(spark, fx["site"])
     assert site.columns == ["chr", "pos", "id", "ref", "alt"]

@@ -231,55 +231,84 @@ def test_foreach_batch_upsert_sink(spark, stream_dir, tmp_path):
     assert spark.read.parquet(store).count() == 6
 
 
-def test_rate_pipeline_bench_bounded_state(spark, tmp_path):
-    """Streaming micro-bench: throughput is measured (not asserted) and
-    the state store stays bounded by keys x open windows at fixed key
-    cardinality — the property that holds at any ingest rate."""
-    m = ops.rate_pipeline_bench(
-        spark,
-        seconds=8.0,
-        rows_per_second=100_000,
-        n_keys=20,
-        work_dir=str(tmp_path / "bench"),
-    )
-    assert m["input_rows"] > 0 and m["batches"] >= 1
-    assert m["rows_per_sec"] > 0
-    # watermark 2s + 1s windows: open windows stay in single digits,
-    # so state is O(n_keys * open_windows) — far below input_rows
-    assert 0 < m["state_rows_max"] <= 20 * 40
-    assert 0 < m["upsert_table_rows"] <= 20 * 40
+def test_tumbling_upsert_pipeline_bounded_state(spark, tmp_path):
+    """ST1+ST9 end to end: tumbling_counts -> start_upsert_sink over
+    seeded files, one file per trigger. Every row is consumed, the
+    state store holds only the open windows (keys x open windows, not
+    the input), and once a sentinel a day later moves the watermark
+    past every window the upsert table equals the batch aggregate."""
+    import os
 
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-def test_pinned_stream_bench_deterministic_workload(spark, tmp_path):
-    """bench.py's streaming block: the pinned variant must consume
-    exactly n_rows in exactly n_files batches (trendable across
-    rounds), keep state bounded by keys x open windows, and upsert a
-    key-bounded table."""
-    m = ops.pinned_stream_bench(
-        spark,
-        n_rows=50_000,
-        n_files=4,
-        n_keys=20,
-        rows_per_second=100_000,
-        work_dir=str(tmp_path / "bench"),
+    n_files, rows_per_file, n_keys = 4, 500, 5
+    width_s, file_span_s = 60, 120  # two windows per file
+    rng = np.random.default_rng(7)
+    base = np.datetime64("2024-03-01T00:00:00", "us")
+    in_dir = tmp_path / "events"
+    in_dir.mkdir()
+    schema = pa.schema(
+        [("ts", pa.timestamp("us", tz="UTC")), ("key", pa.int64()), ("value", pa.float64())]
     )
-    assert m["input_rows"] == 50_000
-    assert m["batches"] == 4
-    assert m["rows_per_sec"] > 0
-    # 50k rows at 100k rows/s of event time = 0.5s of event time ->
-    # exactly 1 open 1s window; upsert table holds n_keys rows
-    assert 0 < m["state_rows_max"] <= 20 * 40
-    assert m["upsert_table_rows"] == 20
-    # workload is pinned: a second run sees the identical input shape
-    m2 = ops.pinned_stream_bench(
-        spark,
-        n_rows=50_000,
-        n_files=4,
-        n_keys=20,
-        rows_per_second=100_000,
-        work_dir=str(tmp_path / "bench2"),
+
+    def write(i, ts, keys, values):
+        path = str(in_dir / f"part-{i:03d}.parquet")
+        pq.write_table(pa.table([ts, keys, values], schema=schema), path)
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))  # trigger order
+
+    for i in range(n_files):
+        # file i covers [i, i+1) x file_span_s: no row is ever behind the watermark
+        off = rng.integers(i * file_span_s * 10**6, (i + 1) * file_span_s * 10**6, rows_per_file)
+        write(
+            i,
+            base + off.astype("timedelta64[us]"),
+            rng.integers(0, n_keys, rows_per_file),
+            rng.integers(0, 1000, rows_per_file).astype(np.float64),
+        )
+    sentinel_ts = base + np.timedelta64(n_files * file_span_s + 86_400, "s")
+    write(n_files, np.array([sentinel_ts]), np.array([0]), np.array([0.0]))
+
+    src = (
+        spark.readStream.schema("ts timestamp, key bigint, value double")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(in_dir))
     )
-    assert (m2["input_rows"], m2["batches"]) == (m["input_rows"], m["batches"])
+    agg = ops.tumbling_counts(src, key_col="key", width=f"{width_s} seconds", delay="30 seconds")
+    store = str(tmp_path / "store")
+    q = ops.start_upsert_sink(
+        agg, spark, base_dir=store, keys=["window_start", "key"],
+        checkpoint_dir=str(tmp_path / "ck"),
+    )
+    try:
+        q.awaitTermination(180)
+    finally:
+        q.stop()
+
+    progress = [p for p in q.recentProgress if p.get("numInputRows")]
+    assert sum(p["numInputRows"] for p in progress) == n_files * rows_per_file + 1
+    assert len(progress) == n_files + 1  # one trigger per file, sentinel included
+    state_rows_max = max(
+        so.get("numRowsTotal", 0) for p in q.recentProgress for so in p.get("stateOperators") or []
+    )
+    # a trigger holds its own file's windows plus the previous file's
+    # last one (still above the watermark), whatever the input volume;
+    # a micro-batch run twice by the sink would report twice as many
+    open_windows = file_span_s // width_s + 1
+    assert 0 < state_rows_max <= n_keys * open_windows < n_files * rows_per_file
+
+    expected = (
+        spark.read.parquet(str(in_dir))
+        .where(F.col("ts") < F.lit(str(sentinel_ts)).cast("timestamp"))
+        .groupBy(F.window("ts", f"{width_s} seconds"), "key")
+        .agg(F.count("*").alias("n_events"), F.sum("value").alias("sum_value"))
+        .select(F.col("window.start").alias("window_start"), "key", "n_events", "sum_value")
+    )
+    got = spark.read.parquet(store)
+    cols = ["window_start", "key", "n_events", "sum_value"]
+    assert sorted(got.select(cols).collect()) == sorted(expected.select(cols).collect())
+    assert got.count() > n_keys * open_windows  # more windows closed than were ever open
 
 
 def test_decayed_counter_fold_is_exact_and_batch_invariant():
@@ -1063,23 +1092,37 @@ def test_moments_stream_tws(spark, tmp_path):
                 .option("maxFilesPerTrigger", 1)
                 .parquet(str(d))
             )
-            out = _run(
-                spark, ops.moments_stream_tws(stream), name, mode="update"
-            ).collect()
+            q = (
+                ops.moments_stream_tws(stream)
+                .writeStream.format("memory")
+                .queryName(name)
+                .outputMode("update")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination(120)
+            out = spark.sql(f"select * from {name}").collect()
             final = {}
             for r in out:
                 if final.get(r["user_id"], (0,))[0] <= r["n"]:
                     final[r["user_id"]] = (
                         r["n"], r["s_micro"], r["q_micro2"], r["mean_micro"]
                     )
-            return out, final
+            state_rows = max(
+                so.get("numRowsTotal", 0)
+                for p in q.recentProgress
+                for so in p.get("stateOperators") or []
+            )
+            return out, final, state_rows
 
-        out3, final3 = run(
+        out3, final3, state3 = run(
             [rows_all[:4], rows_all[4:12], rows_all[12:]], "tws_split"
         )
-        _, final1 = run([rows_all], "tws_oneshot")
+        _, final1, state1 = run([rows_all], "tws_oneshot")
         # batching-invariant cumulative moments
         assert final3 == final1
+        # one state row per key: the typed state is per user, not per event
+        assert state3 == state1 == len({r[2] for r in rows_all})
         assert final3[1] == (12, 511_000_000, str(
             11 * 1_000_000**2 + 500_000_000**2
         ), 42_583_333)
